@@ -15,7 +15,9 @@ Design (a deliberately small Delta-log subset):
   commits.
 * A commit is ONE atomic manifest publish: ``_vlog/{N}.json`` names the
   data directories visible at version N (an append lists its parent's
-  directories plus its own; an overwrite lists only its own). The
+  directories plus its own; an overwrite lists only its own; a keyed
+  rewrite — upsert / delete / apply-changes — lists the parent's
+  directories it did not touch plus its own). The
   manifest is written to a hidden temp name and ``rename``d into place
   — Hadoop-FS rename does not replace an existing destination, so two
   writers racing the same version number produce ONE winner; the loser
@@ -25,11 +27,18 @@ Design (a deliberately small Delta-log subset):
   commit (data directory written, manifest missing) is invisible by
   construction, and an interrupted writer leaves only garbage a later
   ``vacuum`` removes.
+* Keyed rewrites are copy-on-write at commit-directory granularity
+  (Delta's MERGE rewrites only the files a match lands in; here the
+  unit is the directory): only the parent directories holding a row
+  the commit replaces or removes are rewritten, into ONE fresh
+  directory; every other directory carries over by reference. A
+  commit whose keys are all new writes only its batch.
 * ``vacuum`` deletes data directories referenced by NO retained
   manifest, oldest manifests first — time travel keeps working for
   every retained version. (Delta's checkpoint compaction is not
   needed at this manifest granularity: one small JSON per commit,
-  and reads touch one of them.)
+  and reads touch one of them; ``checkpoint_if_due`` bounds the
+  directory chain that appends and keyed rewrites grow.)
 
 Reading MUST go through :func:`read_version` — a naive
 ``spark.read.parquet(table_root)`` cannot silently union every
@@ -255,6 +264,7 @@ def write_version(
     optimized_write_split_rows: int = _AUTO_SPLIT_ROWS,
     _carry_txn: bool = False,
     _manifest_extra: dict | None = None,
+    _keep_dirs: list[str] | None = None,
 ) -> int:
     """Commit ``df`` as a new version of the table at ``path``.
 
@@ -435,11 +445,15 @@ def write_version(
             # content-preserving rewrite (upsert/checkpoint), which must
             # carry it or a compacted-away streaming batch would replay
             # as new after a crash
-            if _carry_txn and parent is not None:
-                txn_map = dict(
-                    _read_manifest(jvm, fs, path, parent).get("txn", {})
-                )
-            dirs = [commit_dir]
+            pm = {}
+            if (_carry_txn or _keep_dirs) and parent is not None:
+                pm = _read_manifest(jvm, fs, path, parent)
+            if _carry_txn:
+                txn_map = dict(pm.get("txn", {}))
+            # a keyed rewrite keeps the parent directories it did not
+            # touch by reference (_publish_with_changes)
+            keep = set(_keep_dirs or ())
+            dirs = [d for d in pm.get("dirs", []) if d in keep] + [commit_dir]
             from pyspark.sql.types import StructField, StructType
 
             table_schema = StructType([
@@ -665,30 +679,124 @@ def _write_change_sidecar(spark, path: str, ev: DataFrame) -> str:
     return chdir
 
 
+#: the commit directory a scanned row was read from (``_tag_dirs``)
+_DIR_COL = "__mfs_dir"
+
+
+def _tag_dirs(df: DataFrame) -> DataFrame:
+    """A version scan plus the commit directory (``data/<name>``) each
+    row was read from, projected at the scan, where
+    ``input_file_name`` is defined. The LAST ``/data/<name>/`` segment
+    of the file path is the commit directory: the table root may
+    contain ``/data/`` too, and hive partition directories are
+    ``col=value``, never ``data``."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(
+        _DIR_COL,
+        F.regexp_extract(F.input_file_name(), r".*/(data/[^/]+)/", 1),
+    )
+
+
+def _preimages(hits: DataFrame, keys: list[str], cols: list[str]):
+    """One ``_change_pre`` image per key among the parent rows a keyed
+    commit replaces, with the directories those rows sit in
+    (``_DIR_COL``, an array). A key held by several parent rows (a
+    table outside the unique-key contract) must still yield ONE event
+    per incoming row: joined unaggregated, the batch fanned out once
+    per duplicate and the commit multiplied it."""
+    from pyspark.sql import functions as F
+
+    return hits.groupBy(*keys).agg(
+        F.first(F.struct(*cols)).alias("_change_pre"),
+        F.collect_set(_DIR_COL).alias(_DIR_COL),
+    )
+
+
+def _type_names(df: DataFrame) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
 def _publish_with_changes(
-    spark, df: DataFrame, path: str, base_version: int, *,
+    spark, path: str, base_version: int, current: DataFrame,
+    hits: DataFrame, rewrite, *,
     ev: DataFrame | None = None, op: str | None = None, **write_kwargs,
 ) -> int:
     """The keyed-rewrite commit protocol, shared by upsert / delete /
-    apply-changes: stage the change sidecar (when ``ev`` is given),
-    publish the overwrite pinned to ``base_version``, and reclaim the
-    staged sidecar on ANY publish failure — including a lost
-    ``expected_parent`` race. ``ev=None`` (change_feed off) publishes
-    with no ``op`` in the manifest, so diff composition falls back to
-    the snapshot join for the commit, exactly as documented."""
-    extra = None
-    if ev is not None:
-        chdir = _write_change_sidecar(spark, path, ev)
-        extra = {"op": op, "changes": chdir}
+    apply-changes: copy-on-write at commit-directory granularity.
+
+    ``current`` is the scan of ``base_version``; ``hits`` are its rows
+    the commit replaces or removes, tagged by :func:`_tag_dirs`; the
+    directories they sit in are TOUCHED.
+    ``rewrite(rows, changes)`` maps a scan of the touched directories
+    to the new directory's content; every untouched directory carries
+    over to the new manifest by reference (``_keep_dirs``). No hit
+    rows: the new directory holds only what ``rewrite`` adds. The
+    manifest stays a ``mode: "overwrite"`` commit, so every reader of
+    the log is unchanged. Every directory counts as touched — exactly
+    the full rewrite — when the content's column types differ from the
+    parent's (a batch of wider types: kept directories would disagree
+    with the recorded schema), or when a tagged name is not a parent
+    directory (a path the tag misparsed; keeping the directory it
+    missed would duplicate its rows).
+
+    ``ev`` (change feed on) is the change events, built from ``hits``,
+    each with ``_DIR_COL`` holding the directories of its preimage
+    rows (an array). The sidecar is staged FIRST, and the touched set
+    is collected on that same job by a ``DataFrame.observe`` at the
+    top of the write — an observe deeper in the plan reports nothing
+    once adaptive execution replaces its stage by an empty relation.
+    ``rewrite`` gets the staged sidecar as ``changes``, so a batch can
+    be read back from its post images. ``ev=None`` (change feed off)
+    finds the touched set with one small collect and publishes with no
+    ``op`` in the manifest, so diff composition falls back to the
+    snapshot join for the commit. The publish is pinned to
+    ``base_version``, and a staged sidecar is reclaimed on ANY failure
+    — including a lost ``expected_parent`` race."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    m = _read_manifest(*_fs(spark, path), path, base_version)
+    chdir = None
     try:
+        if ev is not None:
+            obs = Observation(f"mfs_touched_{uuid.uuid4().hex[:12]}")
+            ev = ev.observe(
+                obs, F.flatten(F.collect_set(_DIR_COL)).alias("dirs")
+            ).drop(_DIR_COL)
+            chdir = _write_change_sidecar(spark, path, ev)
+            touched = set(obs.get["dirs"])
+        else:
+            touched = {
+                r[0] for r in hits.select(_DIR_COL).distinct().collect()
+            }
+        # the known schema spares the read-back a footer-inference job
+        changes = (
+            spark.read.schema(ev.schema).parquet(f"{path}/{chdir}")
+            if chdir else None
+        )
+        rows = current.limit(0)  # nothing touched: an empty relation
+        if touched:
+            rows = _scan_manifest_dirs(
+                spark, path, m, dirs=[d for d in m["dirs"] if d in touched]
+            )
+        content = rewrite(rows, changes)
+        if not touched <= set(m["dirs"]) or (
+            _type_names(content) != _type_names(current)
+        ):
+            touched = set(m["dirs"])
+            content = rewrite(current, changes)
         return write_version(
-            df, path, mode="overwrite", expected_parent=base_version,
-            _carry_txn=True, _manifest_extra=extra, **write_kwargs,
+            content, path, mode="overwrite", expected_parent=base_version,
+            _carry_txn=True,
+            _manifest_extra={"op": op, "changes": chdir} if chdir else None,
+            _keep_dirs=[d for d in m["dirs"] if d not in touched],
+            **write_kwargs,
         )
     except Exception:
-        if extra is not None:
+        if chdir is not None:
             jvm, fs = _fs(spark, path)
-            fs.delete(_hpath(jvm, path, extra["changes"]), True)
+            fs.delete(_hpath(jvm, path, chdir), True)
         raise
 
 
@@ -701,38 +809,44 @@ def upsert_version(
     version's rows whose key is absent from ``df``, plus every row of
     ``df`` — updates replace, inserts append, committed as ONE
     overwrite version (pre-merge versions keep time-traveling until
-    vacuumed). Plan shape: one left-anti join keyed on ``keys`` — at
-    scale the incoming batch side broadcasts under AQE; nothing else
-    shuffles. The commit is pinned to the version it merged against
-    (``expected_parent``): if the table moves concurrently, the publish
-    raises :class:`VersionConflictError` instead of silently erasing
-    the concurrent commit's rows — callers retry the whole merge.
+    vacuumed). The commit rewrites only the parent's commit
+    directories that hold a row whose key is in ``df`` — those rows
+    minus the batch keys, plus the batch, land in ONE new directory —
+    and keeps every other directory by reference
+    (:func:`_publish_with_changes`): a batch of new keys writes only
+    itself. Plan shape: a left-semi restriction of the parent to the
+    incoming keys (the key set broadcasts) finds the touched
+    directories; one left-anti join rewrites them; only
+    increment-sized relations shuffle. The commit is pinned to the
+    version it merged against (``expected_parent``): if the table
+    moves concurrently, the publish raises
+    :class:`VersionConflictError` instead of silently erasing the
+    concurrent commit's rows — callers retry the whole merge.
 
     ``change_feed`` (default on — Delta's CDF lever, round 16):
     the merge already computes exactly which keys it touches, so the
     commit also persists an increment-sized change sidecar — one row
-    per incoming key with ``op`` ('insert' when the key was absent
+    per incoming row with ``op`` ('insert' when the key was absent
     from the parent, else 'update') and the full pre/post row images —
     and records it in the manifest (``op``/``changes``).
     :func:`diff_versions` then composes diffs ACROSS upsert commits by
-    reading only the sidecars, never joining two snapshots. Costs one
-    extra pass over the parent (the preimage lookup: a left-semi
-    restriction of the parent to the incoming keys, then a join of the
-    batch against that increment-sized relation — both joins keep the
-    small side broadcastable); pass ``False`` to skip it, which sends
-    diffs over this commit back to the snapshot join. The batch's OWN
-    lineage is evaluated exactly once per commit (r17): the sidecar is
-    staged first and the overwrite's batch side is read back from its
-    post images, so a composed merge plan never runs twice and the
-    committed rows are bit-identical to what the change feed records.
+    reading only the sidecars, never joining two snapshots. The
+    preimages come from the same left-semi restriction that finds the
+    touched directories, so the sidecar job also collects them. Pass
+    ``False`` to skip the sidecar, which sends diffs over this commit
+    back to the snapshot join and finds the touched directories with
+    one small collect instead. The batch's OWN lineage is evaluated
+    exactly once per commit (r17): the sidecar is staged first and the
+    rewrite's batch side is read back from its post images, so a
+    composed merge plan never runs twice and the committed rows are
+    bit-identical to what the change feed records.
 
     ``optimized_write``/``optimized_write_split_rows`` pass through to
     :func:`write_version`. A merge into a hive-partitioned table is
-    where ``"auto"`` matters most: the commit rewrites the FULL table
-    content, so every partition value's entire volume — not just the
-    batch's — flows through the optimizeWrite shuffle, and the default
-    one-task-per-value shape serializes each hot value into a single
-    writer."""
+    where ``"auto"`` matters most: every rewritten directory's entire
+    volume — not just the batch's — flows through the optimizeWrite
+    shuffle, and the default one-task-per-value shape serializes each
+    hot value into a single writer."""
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
@@ -745,72 +859,48 @@ def upsert_version(
     base_version = versions[-1]
     current = read_version(spark, path, base_version)
     incoming = df.select(*current.columns)
-    if not change_feed:
-        kept = current.join(df.select(*keys).distinct(), keys, "left_anti")
-        return _publish_with_changes(
-            spark, kept.unionByName(incoming), path, base_version,
-            ev=None, op="upsert",
-            optimized_write=optimized_write,
-            optimized_write_split_rows=optimized_write_split_rows,
-        )
-    # preimage lookup, staged so BOTH joins keep their small side
-    # on the broadcastable right (review-caught: a left-outer join
-    # can only broadcast its right side, and putting the full
-    # parent there would shuffle the table per upsert): first
-    # restrict the parent to the incoming keys (left-semi, the
-    # key set broadcasts), then left-join the batch against that
-    # increment-sized preimage relation (it broadcasts too)
-    pre = current.join(
+    hits = _tag_dirs(current).join(
         incoming.select(*keys).distinct(), keys, "left_semi"
+    )
+    # both joins keep their small side on the broadcastable right (a
+    # left-outer join can only broadcast its right side, and the full
+    # parent there would shuffle the table per upsert): the semi-join
+    # restricts the parent to the incoming keys, then the batch
+    # left-joins that increment-sized preimage relation
+    ev = incoming.join(
+        _preimages(hits, keys, current.columns), keys, "left"
     ).select(
-        *keys,
-        F.struct(*current.columns).alias("_change_pre"),
-        F.lit(True).alias("__matched"),
+        F.when(
+            F.col("_change_pre").isNotNull(), F.lit("update")
+        ).otherwise(F.lit("insert")).alias("_change_op"),
+        F.col("_change_pre"),
+        F.struct(*[
+            incoming[c] for c in current.columns
+        ]).alias("_change_post"),
+        _DIR_COL,
     )
-    ev = (
-        incoming.join(pre, keys, "left")
-        .select(
-            F.when(
-                F.col("__matched").isNotNull(), F.lit("update")
-            ).otherwise(F.lit("insert")).alias("_change_op"),
-            F.col("_change_pre"),
-            F.struct(*[
-                incoming[c] for c in current.columns
-            ]).alias("_change_post"),
+
+    def rewrite(rows, changes):
+        # with a sidecar, the batch side is read back FROM its staged
+        # post images: the sidecar job is the ONLY evaluation of the
+        # incoming batch's lineage, the read-back is increment-sized,
+        # and the committed batch rows are bit-identical to the
+        # recorded post images (the change feed can never drift from
+        # the table)
+        batch = (
+            incoming if changes is None
+            else changes.select("_change_post.*")
         )
-    )
-    # Stage the sidecar FIRST, then rebuild the commit's batch side
-    # FROM the staged parquet (r17, guide §1.2 "don't compute things
-    # twice"): the sidecar job is the ONLY evaluation of the incoming
-    # batch's lineage — previously the overwrite's union re-ran it in
-    # full (a composed merge plan pays twice), and the parent was the
-    # only shared input. The post-image read-back is increment-sized,
-    # costs no extra job, and guarantees the committed batch rows are
-    # bit-identical to the sidecar's recorded post images (the change
-    # feed can never drift from the table it describes). The parent is
-    # still scanned twice per commit — once for the preimage semi-join,
-    # once for the overwrite's anti-join — which is the floor for a
-    # two-sink split without a corpus-sized persist; at scale the
-    # semi-join side prunes through the skipping sidecar while the
-    # rewrite must read everything anyway.
-    chdir = _write_change_sidecar(spark, path, ev)
-    try:
-        ch = spark.read.parquet(f"{path}/{chdir}")
-        batch = ch.select("_change_post.*")
-        kept = current.join(
+        return rows.join(
             batch.select(*keys).distinct(), keys, "left_anti"
-        )
-        return write_version(
-            kept.unionByName(batch), path, mode="overwrite",
-            expected_parent=base_version, _carry_txn=True,
-            _manifest_extra={"op": "upsert", "changes": chdir},
-            optimized_write=optimized_write,
-            optimized_write_split_rows=optimized_write_split_rows,
-        )
-    except Exception:
-        jvm, fs = _fs(spark, path)
-        fs.delete(_hpath(jvm, path, chdir), True)
-        raise
+        ).unionByName(batch)
+
+    return _publish_with_changes(
+        spark, path, base_version, current, hits, rewrite,
+        ev=ev if change_feed else None, op="upsert",
+        optimized_write=optimized_write,
+        optimized_write_split_rows=optimized_write_split_rows,
+    )
 
 
 def restore_version(
@@ -1332,24 +1422,27 @@ def apply_changes_version(
 
     Plan shape (all increment-sized sides broadcastable, the
     upsert_version staging): one window over the events on ``keys``
-    (the only shuffle, sized by the increment), one left-anti of the
-    target against the touched keys, and — with ``change_feed`` — one
-    left-semi preimage restriction of the target. Replay-idempotent by
+    (sized by the increment), one left-semi restriction of the target
+    to the touched keys (it finds the directories to rewrite and, with
+    ``change_feed``, the preimages), and one left-anti of those
+    directories against the touched keys. Replay-idempotent by
     CONTENT: re-applying the same events yields the same table, which
     is what lets a streaming consumer (``mirror_changes_stream``)
     survive foreachBatch replays without a txn record.
 
     Write amplification, stated plainly: like every keyed rewrite in
     this log (``upsert_version``, ``delete_version``), the commit
-    REWRITES the table's full content — the manifest references whole
-    commit directories, so untouched rows cannot be kept by reference
-    (Delta's file-level MERGE rewrites only matched files; that
-    granularity is a different manifest protocol). The netting is the
-    amortizer: one apply folds an ARBITRARY number of source commits
-    into one rewrite, so a catch-up ``availableNow`` drain costs one
-    table rewrite total, and a live mirror should size its trigger
+    rewrites the target's commit DIRECTORIES that hold a touched key,
+    into one new directory, and keeps every other directory by
+    reference (Delta's file-level MERGE rewrites only matched files;
+    the manifest's unit is the directory). Events spread over many
+    directories still rewrite them all. The netting is the amortizer:
+    one apply folds an ARBITRARY number of source commits into one
+    rewrite, so a catch-up ``availableNow`` drain pays the touched
+    directories once, and a live mirror should size its trigger
     interval by how much write amplification a rewrite is worth —
     probe 15 (COVERAGE.md) quantifies the flat-vs-table-size split.
+    ``checkpoint_if_due`` bounds the directory chain the commits grow.
 
     Raises :class:`VersionConflictError` if the target moves between
     the read and the publish (expected_parent-pinned, like
@@ -1425,36 +1518,34 @@ def apply_changes_version(
             .join(current, keys, "left_semi").isEmpty()
         ):
             return None
-        kept = current.join(touched, keys, "left_anti")
-        ev = None
-        if change_feed:
-            pre = current.join(touched, keys, "left_semi").select(
-                *keys,
-                F.struct(*data_cols).alias("_change_pre"),
+        hits = _tag_dirs(current).join(touched, keys, "left_semi")
+        ev = (
+            net.join(_preimages(hits, keys, data_cols), keys, "left")
+            .where(  # net-delete of an absent key: a no-op, not an
+                # event — the target never had the row
+                (F.col("_change_type") != "delete")
+                | F.col("_change_pre").isNotNull()
             )
-            ev = (
-                net.join(pre, keys, "left")
-                .where(  # net-delete of an absent key: a no-op, not an
-                    # event — the target never had the row
-                    (F.col("_change_type") != "delete")
-                    | F.col("_change_pre").isNotNull()
-                )
-                .select(
-                    F.when(F.col("_change_type") == "delete",
-                           F.lit("delete"))
-                    .when(F.col("_change_pre").isNotNull(),
-                          F.lit("update"))
-                    .otherwise(F.lit("insert")).alias("_change_op"),
-                    F.col("_change_pre"),
-                    F.when(
-                        F.col("_change_type") != "delete",
-                        F.struct(*[net[c] for c in data_cols]),
-                    ).alias("_change_post"),
-                )
+            .select(
+                F.when(F.col("_change_type") == "delete",
+                       F.lit("delete"))
+                .when(F.col("_change_pre").isNotNull(),
+                      F.lit("update"))
+                .otherwise(F.lit("insert")).alias("_change_op"),
+                F.col("_change_pre"),
+                F.when(
+                    F.col("_change_type") != "delete",
+                    F.struct(*[net[c] for c in data_cols]),
+                ).alias("_change_post"),
+                _DIR_COL,
             )
+        )
         return _publish_with_changes(
-            spark, kept.unionByName(upserts), path, base_version,
-            ev=ev, op="upsert",
+            spark, path, base_version, current, hits,
+            lambda rows, _changes: rows.join(
+                touched, keys, "left_anti"
+            ).unionByName(upserts),
+            ev=ev if change_feed else None, op="upsert",
         )
     finally:
         # localCheckpoint blocks are session-pinned — release them
@@ -1472,9 +1563,10 @@ def delete_version(
     """Row-level DELETE (Delta's DELETE WHERE): commit a new version
     holding the latest version's rows with ``condition`` NOT true —
     rows where the predicate evaluates NULL are KEPT (SQL DELETE
-    semantics). ``condition`` is a Column or a SQL string. One
-    content-preserving rewrite pinned to the version it read
-    (``expected_parent`` — a concurrent commit raises
+    semantics). ``condition`` is a Column or a SQL string. One rewrite
+    of the commit directories holding a deleted row (every other
+    directory carries over by reference), pinned to the version it
+    read (``expected_parent`` — a concurrent commit raises
     :class:`VersionConflictError` instead of silently resurrecting or
     dropping its rows); the txn history carries through. Pre-delete
     versions keep time-traveling until vacuumed.
@@ -1482,9 +1574,10 @@ def delete_version(
     ``change_feed`` (default on): also persist the DELETED rows as a
     change sidecar (op='delete', full preimage) recorded in the
     manifest, so :func:`diff_versions` composes diffs across this
-    commit from the increment alone. Costs one extra scan with the
-    predicate inverted — pushdown applies, so it reads roughly what
-    the delete removes."""
+    commit from the increment alone. The sidecar job scans the table
+    with the predicate (pushdown applies) and also collects the
+    directories the deleted rows sit in; without it, one small collect
+    finds them."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
@@ -1496,20 +1589,20 @@ def delete_version(
         raise FileNotFoundError(f"no committed versions under {path}")
     base_version = versions[-1]
     current = read_version(spark, path, base_version)
-    kept = current.where(~F.coalesce(cond, F.lit(False)))
-    ev = None
-    if change_feed:
-        removed = current.where(F.coalesce(cond, F.lit(False)))
-        ev = removed.select(
-            F.lit("delete").alias("_change_op"),
-            F.struct(*current.columns).alias("_change_pre"),
-            F.lit(None).cast(
-                _T.StructType(current.schema.fields)
-            ).alias("_change_post"),
-        )
+    drop = F.coalesce(cond, F.lit(False))
+    removed = _tag_dirs(current).where(drop)
+    ev = removed.select(
+        F.lit("delete").alias("_change_op"),
+        F.struct(*current.columns).alias("_change_pre"),
+        F.lit(None).cast(
+            _T.StructType(current.schema.fields)
+        ).alias("_change_post"),
+        F.array(_DIR_COL).alias(_DIR_COL),
+    )
     return _publish_with_changes(
-        spark, kept, path, base_version,
-        ev=ev, op="delete",
+        spark, path, base_version, current, removed,
+        lambda rows, _changes: rows.where(~drop),
+        ev=ev if change_feed else None, op="delete",
         optimized_write=optimized_write,
         optimized_write_split_rows=optimized_write_split_rows,
     )
@@ -1589,7 +1682,9 @@ def checkpoint_if_due(
     is flat in commits (one manifest read) so the log itself never
     needs compacting; what grows with an append chain is the READ
     (Spark lists/scans one directory per append, probe 9 measures it at
-    1000 commits). Calling this after every ``write_version`` bounds
+    1000 commits). Keyed rewrites grow the chain too: each one that
+    leaves some directory untouched adds its own. Calling this after
+    every ``write_version`` or keyed rewrite bounds
     every reader's chain at ``max_dirs`` while paying the full-table
     rewrite only once per ``max_dirs`` appends — O(N) amortized write
     amplification per row instead of the O(N²/k) a

@@ -8068,15 +8068,20 @@ FROM events WHERE event_id % 7 = 0 AND event_id < 21000
 
 def q_versioned_restore_diff(spark, sf_dir):
     """RESTORE + version diff adjudicated end-to-end
-    (sources/versioned.py::restore_version/diff_versions): a bad-deploy
-    overwrite lands on a two-commit table, ``diff_versions`` reports
-    the damage (changed/removed/added per key), and ``restore_version``
-    rolls back by publishing ONE manifest — no data rewritten (the
-    data-directory listing is asserted unchanged), latest content
-    asserted equal to the pre-deploy version. Protocol facts ride
-    in-row as oracle-asserted literals (the zorder_scan pattern); the
-    diff rows themselves are recomputed by the oracle from the same
-    id-mod derivation."""
+    (sources/versioned.py::restore_version/diff_versions/upsert_version):
+    a bad-deploy overwrite lands on a two-commit table, ``diff_versions``
+    reports the damage (changed/removed/added per key), and
+    ``restore_version`` rolls back by publishing ONE manifest — no data
+    rewritten (the data-directory listing is asserted unchanged), latest
+    content asserted equal to the pre-deploy version. An upsert leg then
+    updates keys of the restored table's second directory and inserts
+    new ones: the commit rewrites only that directory (the first is
+    kept by reference) and its diff composes from the change sidecar
+    alone (read set asserted). Each diff row carries the key's value at
+    the diff's head version. Protocol facts ride in-row as
+    oracle-asserted literals (the zorder_scan pattern); the diff rows
+    themselves are recomputed by the oracle from the same id-mod
+    derivation."""
     from my_feast_spark.sources.versioned import (
         _fs as _vfs,
         _read_manifest,
@@ -8084,6 +8089,7 @@ def q_versioned_restore_diff(spark, sf_dir):
         list_versions,
         read_version,
         restore_version,
+        upsert_version,
         write_version,
     )
 
@@ -8132,23 +8138,64 @@ def q_versioned_restore_diff(spark, sf_dir):
     )
     if n_mismatch:
         raise AssertionError(f"{n_mismatch} rows differ post-restore")
-    return diff.select(
-        "event_id",
-        "change",
+
+    # the upsert leg: update even mod-1 keys (second directory), insert
+    # even mod-2 keys; the mod-0 directory is untouched
+    even = ev.where(F.col("event_id") % 2 == 0)
+    batch = even.where(F.col("event_id") % 3 == 1).select(
+        "event_id", (F.col("value") + F.lit(2.0)).alias("value")
+    ).unionByName(even.where(F.col("event_id") % 3 == 2))
+    v4 = upsert_version(batch, path, ["event_id"])
+    m4 = _read_manifest(jvm, vfs, path, v4)
+    kept = set(m4["dirs"]) & set(m["dirs"])
+    upsert_diff = diff_versions(spark, path, v3, v4, ["event_id"])
+    stray = [
+        f for f in upsert_diff.inputFiles() if f"/{m4['changes']}/" not in f
+    ]
+    if stray:
+        raise AssertionError(f"upsert diff read beyond its sidecar: {stray}")
+
+    def _leg(d, leg, v_new):
+        head = read_version(spark, path, v_new)
+        return d.join(head, "event_id", "left").select(
+            "event_id", "change", F.lit(leg).alias("leg"), "value",
+        )
+
+    return _leg(diff, "deploy", 2).unionByName(
+        _leg(upsert_diff, "upsert", v4)
+    ).select(
+        "*",
         F.lit(1).alias("restored_from"),
         F.lit(1).alias("restore_manifest_only"),
         F.lit(0).alias("post_restore_mismatches"),
+        F.lit(len(kept)).alias("upsert_kept_dirs"),
     )
 
 
 SQL_VERSIONED_RESTORE_DIFF = """
-SELECT event_id,
-       CASE WHEN event_id % 3 = 0 THEN 'changed'
-            WHEN event_id % 3 = 1 THEN 'removed'
-            ELSE 'added' END AS change,
-       1 AS restored_from, 1 AS restore_manifest_only,
-       0 AS post_restore_mismatches
-FROM events WHERE event_id % 5 = 0 AND event_id < 25000
+WITH ev AS (
+  SELECT event_id, value FROM events
+  WHERE event_id % 5 = 0 AND event_id < 25000
+), legs AS (
+  SELECT event_id,
+         CASE WHEN event_id % 3 = 0 THEN 'changed'
+              WHEN event_id % 3 = 1 THEN 'removed'
+              ELSE 'added' END AS change,
+         'deploy' AS leg,
+         CASE WHEN event_id % 3 = 0 THEN value + CAST(1.0 AS DOUBLE)
+              WHEN event_id % 3 = 2 THEN value END AS value
+  FROM ev
+  UNION ALL
+  SELECT event_id,
+         CASE WHEN event_id % 3 = 1 THEN 'changed' ELSE 'added' END,
+         'upsert',
+         CASE WHEN event_id % 3 = 1 THEN value + CAST(2.0 AS DOUBLE)
+              ELSE value END
+  FROM ev WHERE event_id % 2 = 0 AND event_id % 3 IN (1, 2)
+)
+SELECT *, 1 AS restored_from, 1 AS restore_manifest_only,
+       0 AS post_restore_mismatches, 1 AS upsert_kept_dirs
+FROM legs
 """
 
 
@@ -8578,12 +8625,10 @@ QUERIES: dict[str, tuple] = {
     # CORRECTNESS_r15, value-checked at three scale factors by every
     # pytest run (test_oracle_parity.py). ROUND-17 CONTRACT: this block
     # rotates back in-window next round alongside the pinned anchors
-    # (2 + 48 = 50 exactly). versioned_restore_diff sits the tail out
-    # with its behavior UNCHANGED by the round-16 sidecar work (its
-    # registered chain diffs a pure-append prefix, which still takes
-    # the r15 manifest-arithmetic path); when it rotates in r17, extend
-    # its chain with an upsert leg so the sidecar-composed diff gets a
-    # driver row the same round the change enters its window.
+    # (2 + 48 = 50 exactly). versioned_restore_diff's chain now ends in
+    # an upsert leg (a directory-granular commit whose diff composes
+    # from its change sidecar), value-checked by test_oracle_parity.py;
+    # it gets a CORRECTNESS row when this tail rotates in-window.
     "pit_late_arrival": (q_pit_late_arrival, SQL_PIT_LATE_ARRIVAL),
     "hourly_global_agg": (q_hourly_global_agg, SQL_HOURLY_GLOBAL_AGG),
     "event_types_salted": (q_event_types_salted, SQL_EVENT_TYPES_SALTED),

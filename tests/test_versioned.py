@@ -318,6 +318,16 @@ def test_upsert_conflicts_instead_of_losing_concurrent_commit(
             )
     finally:
         V.write_version = orig
+    # the lost race leaks nothing: every directory under data/ is named
+    # by some manifest (neither the staged commit dir nor the staged
+    # change sidecar survives)
+    named = set()
+    for v in list_versions(spark, path):
+        m = json.load(open(f"{path}/_vlog/{v}.json"))
+        named.update(m["dirs"])
+        if m.get("changes"):
+            named.add(m["changes"])
+    assert {f"data/{d}" for d in os.listdir(f"{path}/data")} <= named
     # the concurrent append's row is intact; retrying the merge now
     # sees it and succeeds
     V.upsert_version(
@@ -1352,3 +1362,196 @@ def test_apply_changes_preserves_hive_layout(spark, tmp_path):
     assert files and all("d=b" in f for f in files)
     assert sorted((r.k, r.v) for r in pruned.collect()) == [
         (2, 20), (3, 30)]
+
+
+# --- keyed rewrites are copy-on-write per commit directory ----------------
+
+
+def _manifest(spark, path):
+    with open(f"{path}/_vlog/{list_versions(spark, path)[-1]}.json") as f:
+        return json.load(f)
+
+
+def _listing(path, d):
+    """Every file under one commit directory: relative path -> (size,
+    mtime) — a created or rewritten file changes the listing."""
+    out = {}
+    for root, _dirs, names in os.walk(f"{path}/{d}"):
+        for n in names:
+            st = os.stat(os.path.join(root, n))
+            out[os.path.relpath(os.path.join(root, n), path)] = (
+                st.st_size, st.st_mtime_ns
+            )
+    return out
+
+
+def _three_dirs(spark, path, layout):
+    """A table of three commit directories: keys 0-4, 10-14 plus a
+    second row for key 12 (a duplicate key), and 20-24. ``layout``:
+    'flat'; 'partitioned' (hive ``p`` = k % 2, adopted by the appends);
+    'evolved' (the third directory adds column ``w`` via merge_schema)."""
+    def rows(ks, extra=()):
+        return spark.createDataFrame(
+            [(k, k * 10) for k in ks] + list(extra), ["k", "v"]
+        ).withColumn("p", (F.col("k") % 2).cast("string"))
+
+    d0, d1, d2 = rows(range(5)), rows(range(10, 15), [(12, 121)]), rows(
+        range(20, 25)
+    )
+    if layout != "partitioned":
+        d0, d1, d2 = (d.drop("p") for d in (d0, d1, d2))
+    if layout == "evolved":
+        d2 = d2.withColumn("w", F.lit("x"))
+    write_version(
+        d0, path, partition_by=["p"] if layout == "partitioned" else None
+    )
+    write_version(d1, path, mode="append")
+    write_version(d2, path, mode="append", merge_schema=layout == "evolved")
+    return _manifest(spark, path)["dirs"]
+
+
+def _batch(spark, path, kvs):
+    cols = read_version(spark, path).columns
+    df = spark.createDataFrame(kvs, ["k", "v"])
+    if "p" in cols:
+        df = df.withColumn("p", (F.col("k") % 2).cast("string"))
+    if "w" in cols:
+        df = df.withColumn("w", F.lit("new"))
+    return df
+
+
+LAYOUTS = ["flat", "partitioned", "evolved"]
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_pure_insert_upsert_writes_only_its_batch(spark, tmp_path, layout):
+    from my_feast_spark.sources.versioned import upsert_version
+
+    path = str(tmp_path / "t")
+    parent = _three_dirs(spark, path, layout)
+    before = {d: _listing(path, d) for d in parent}
+    upsert_version(_batch(spark, path, [(100, 1), (101, 2)]), path, ["k"])
+
+    dirs = _manifest(spark, path)["dirs"]
+    assert dirs[:3] == parent and len(dirs) == 4
+    assert {d: _listing(path, d) for d in parent} == before
+    new = spark.read.parquet(f"{path}/{dirs[3]}")
+    assert _rows(new.select("k", "v")) == [(100, 1), (101, 2)]
+    assert read_version(spark, path).count() == 18
+
+
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_update_rewrites_exactly_the_touched_dir(spark, tmp_path, layout):
+    from my_feast_spark.sources.versioned import upsert_version
+
+    path = str(tmp_path / "t")
+    d0, d1, d2 = _three_dirs(spark, path, layout)
+    before = {d: _listing(path, d) for d in (d0, d2)}
+    # keys 12 (held twice) and 13 sit only in the second directory
+    upsert_version(_batch(spark, path, [(12, -1), (13, -2)]), path, ["k"])
+
+    m = _manifest(spark, path)
+    assert m["mode"] == "overwrite" and m["op"] == "upsert"
+    assert m["dirs"][:2] == [d0, d2] and len(m["dirs"]) == 3
+    assert {d: _listing(path, d) for d in (d0, d2)} == before
+    new = spark.read.parquet(f"{path}/{m['dirs'][2]}")
+    assert _rows(new.select("k", "v")) == [
+        (10, 100), (11, 110), (12, -1), (13, -2), (14, 140)
+    ]
+    got = read_version(spark, path)
+    assert _rows(got.where("k IN (12, 13)").select("k", "v")) == [
+        (12, -1), (13, -2)
+    ]
+    assert got.count() == 15
+    if layout == "evolved":
+        # a kept pre-evolution directory still serves NULLs for w
+        assert got.where("k < 5 AND w IS NULL").count() == 5
+        assert _rows(got.where("k IN (12, 20)").select("k", "w")) == [
+            (12, "new"), (20, "x")
+        ]
+    if layout == "partitioned":
+        assert m["partition_by"] == ["p"]
+        assert got.where("p = '0'").count() == 9
+
+
+def test_vacuum_after_partial_upsert_keeps_referenced_dirs(spark, tmp_path):
+    from my_feast_spark.sources.versioned import upsert_version
+
+    path = str(tmp_path / "t")
+    _three_dirs(spark, path, "flat")
+    upsert_version(_batch(spark, path, [(3, -3), (50, 5)]), path, ["k"])
+    want = _rows(read_version(spark, path))
+    m = _manifest(spark, path)
+    vacuum(spark, path, keep_last=1, grace_seconds=0)
+    on_disk = {f"data/{d}" for d in os.listdir(f"{path}/data")}
+    assert set(m["dirs"]) | {m["changes"]} == on_disk
+    assert _rows(read_version(spark, path)) == want
+
+
+def test_change_reads_across_partial_upsert_read_only_its_sidecar(
+    spark, tmp_path
+):
+    from my_feast_spark.sources.versioned import (
+        diff_versions, read_changes, upsert_version,
+    )
+
+    path = str(tmp_path / "t")
+    _three_dirs(spark, path, "flat")
+    v = upsert_version(_batch(spark, path, [(13, -2), (60, 6)]), path, ["k"])
+    sidecar = _manifest(spark, path)["changes"]
+    diff = diff_versions(spark, path, v - 1, v, ["k"])
+    feed = read_changes(spark, path, v - 1, v)
+    for df in (diff, feed):
+        files = df.inputFiles()
+        assert files and all(f"/{sidecar}/" in f for f in files), files
+    assert _rows(diff) == [(13, "changed"), (60, "added")]
+    assert _rows(feed.select("k", "v", "_change_type")) == [
+        (13, -2, "update_postimage"), (13, 130, "update_preimage"),
+        (60, 6, "insert"),
+    ]
+
+
+def test_delete_and_apply_changes_rewrite_only_touched_dirs(spark, tmp_path):
+    from my_feast_spark.sources.versioned import (
+        apply_changes_version, delete_version,
+    )
+
+    path = str(tmp_path / "t")
+    d0, d1, d2 = _three_dirs(spark, path, "flat")
+    delete_version(spark, path, "k = 21")
+    m = _manifest(spark, path)
+    assert m["op"] == "delete" and m["dirs"][:2] == [d0, d1]
+    assert len(m["dirs"]) == 3
+    events = spark.createDataFrame(
+        [(1, -1, "update_postimage", 9), (70, 7, "insert", 9)],
+        ["k", "v", "_change_type", "_commit_version"],
+    )
+    apply_changes_version(events, path, ["k"])
+    m2 = _manifest(spark, path)
+    assert m2["dirs"][:2] == [d1, m["dirs"][2]] and len(m2["dirs"]) == 3
+    assert _rows(read_version(spark, path).where("k IN (1, 21, 70)")) == [
+        (1, -1), (70, 7)
+    ]
+    assert read_version(spark, path).count() == 16
+
+
+def test_upsert_of_wider_types_rewrites_every_dir(spark, tmp_path):
+    """A batch whose column types widen the table's cannot keep the
+    parent's directories (they would disagree with the recorded
+    schema): the commit falls back to rewriting every directory."""
+    from my_feast_spark.sources.versioned import upsert_version
+
+    path = str(tmp_path / "t")
+    for i, mode in enumerate(("overwrite", "append")):
+        write_version(
+            spark.createDataFrame([(i, i)], "k long, v int"), path, mode=mode
+        )
+    upsert_version(
+        spark.createDataFrame([(1, 2**40)], "k long, v long"), path, ["k"]
+    )
+    m = _manifest(spark, path)
+    assert len(m["dirs"]) == 1
+    assert read_version(spark, path).schema["v"].dataType.simpleString() == (
+        "bigint"
+    )
+    assert _rows(read_version(spark, path)) == [(0, 0), (1, 2**40)]

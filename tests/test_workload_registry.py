@@ -27,9 +27,10 @@ PINNED_ANCHORS = {
 # tail out minus the two round-16 retirements. Nothing goes two
 # consecutive rounds without a fresh CORRECTNESS row. ROUND-17
 # CONTRACT: this tail rotates back in-window next round alongside the
-# pinned anchors (2 + 48 = 50 exactly); extend versioned_restore_diff's
-# chain with an upsert leg that round so the sidecar-composed diff is
-# driver-adjudicated the same round it enters the window.
+# pinned anchors (2 + 48 = 50 exactly). versioned_restore_diff's chain
+# carries the upsert leg (the sidecar-composed diff of a
+# directory-granular commit), so it is adjudicated the round it enters
+# the window.
 ROTATION_TAIL = {
     # the round-15 window minus {corpus_vocab, chunk_dedup} (retired),
     # all 50/50 green in CORRECTNESS_r15
@@ -147,8 +148,8 @@ ROTATED_IN = {
 #: re-adjudicated in the window that ships the change. (The streaming
 #: dedup-index marker hardening only affects legacy pre-marker resumes,
 #: which no registered query exercises; versioned_restore_diff's
-#: registered chain diffs a pure-append prefix, unchanged — see the
-#: TAIL block note in workload.py.)
+#: upsert leg is oracle-checked in the tail — see the TAIL block note
+#: in workload.py.)
 CHANGED_OR_NEW_THIS_ROUND = {
     "versioned_replay",
     "pit_versioned_asof",
